@@ -55,3 +55,17 @@ def test_pagerank_matches_under_reliable_checkpointing(gods, spark, tmp_path):
     assert base.keys() == reliable.keys()
     for k in base:
         assert abs(base[k] - reliable[k]) < 1e-12
+
+
+def test_cached_small_aggregate_is_coalesced(spark):
+    # iterative loops cache() their edge relations and rely on AQE to
+    # shrink the session's shuffle partitions to the data; a cached
+    # plan keeps the session count unless the session lets AQE change
+    # a cached plan's output partitioning
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    agg = spark.range(1000).groupBy((F.col("id") % 3).alias("k")).count().cache()
+    try:
+        assert agg.count() == 3
+        assert agg.rdd.getNumPartitions() < 8
+    finally:
+        agg.unpersist()

@@ -155,45 +155,31 @@ def pregel(
     """
     v = vertices.select("id", *keep_cols, *[e.alias(n) for n, e in initial.items()])
     edges.cache()
-    n_e = edges.count()  # materializes the cache; sizes the loop shuffles
     v = cut_lineage(v, eager=True)
-    n_v = v.count()  # cheap: v was just eagerly checkpointed
-
-    from titan_spark.compute.checkpointing import scoped_shuffle_partitions
-
-    # per-round shuffles move vertex-state/edge-sized relations many
-    # rounds; size shuffle parallelism to the LARGER of the cached edge
-    # set and the vertex state (r12, ADVICE r11: on sparse or
-    # label-filtered graphs |V| can far exceed |E|, and an edge-only
-    # scope would run every vertex-state join at a handful of
-    # partitions) instead of paying rounds x session-partitions
-    # near-empty task launches (never raises above the session setting,
-    # so corpus-scale graphs keep full parallelism)
-    with scoped_shuffle_partitions(edges.sparkSession, max(n_e, n_v)):
-        for i in range(max_iterations):
-            sender_ids = None
-            if active_col is not None:
-                sender_ids = v.filter(F.col(active_col)).select("id")
-            msgs = aggregate_messages(
-                v, edges, agg, msg_to_dst=msg_to_dst, msg_to_src=msg_to_src
-            ) if sender_ids is None else _messages(
-                v, edges, msg_to_dst, msg_to_src, sender_ids
-            ).groupBy("id").agg(agg)
-            joined = v.join(msgs, "id", "left")
-            v = joined.select(
-                "id",
-                *keep_cols,
-                *[update.get(n, F.col(n)).alias(n) for n in initial.keys()],
-            )
-            if active_col is not None:
-                # lazy cut + one full count: a single job materializes
-                # the checkpoint AND answers the frontier-empty test
-                # (eager cut + limit(1).count() was two jobs per round)
-                v = cut_lineage(v, eager=False, round_idx=i)
-                if v.filter(F.col(active_col)).count() == 0:
-                    break
-            elif (i + 1) % checkpoint_every == 0:
-                v = cut_lineage(v, eager=True, round_idx=i)
+    for i in range(max_iterations):
+        sender_ids = None
+        if active_col is not None:
+            sender_ids = v.filter(F.col(active_col)).select("id")
+        msgs = aggregate_messages(
+            v, edges, agg, msg_to_dst=msg_to_dst, msg_to_src=msg_to_src
+        ) if sender_ids is None else _messages(
+            v, edges, msg_to_dst, msg_to_src, sender_ids
+        ).groupBy("id").agg(agg)
+        joined = v.join(msgs, "id", "left")
+        v = joined.select(
+            "id",
+            *keep_cols,
+            *[update.get(n, F.col(n)).alias(n) for n in initial.keys()],
+        )
+        if active_col is not None:
+            # lazy cut + one full count: a single job materializes
+            # the checkpoint AND answers the frontier-empty test
+            # (eager cut + limit(1).count() was two jobs per round)
+            v = cut_lineage(v, eager=False, round_idx=i)
+            if v.filter(F.col(active_col)).count() == 0:
+                break
+        elif (i + 1) % checkpoint_every == 0:
+            v = cut_lineage(v, eager=True, round_idx=i)
     if active_col is None and max_iterations % checkpoint_every != 0:
         v = cut_lineage(v, eager=True)
     edges.unpersist(blocking=False)

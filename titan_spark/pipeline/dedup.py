@@ -294,6 +294,29 @@ def prefix_filter_candidates(
     )
 
 
+def verify_broadcast_budget_mb(spark) -> float:
+    """The verify joins' broadcast byte budget in MB: conf
+    ``spark.titan.verifyBroadcastMb``, else env
+    ``SPARK_GRAFT_VERIFY_BC_MB``, else 512. A value that is not a
+    number (``512m``, ``auto``) falls back to 512 with a warning. A
+    budget of 0 or less disables the broadcast arm."""
+    import os
+    import warnings
+
+    raw = spark.conf.get(
+        "spark.titan.verifyBroadcastMb",
+        os.environ.get("SPARK_GRAFT_VERIFY_BC_MB", "512"),
+    )
+    try:
+        return float(raw)
+    except (TypeError, ValueError):
+        warnings.warn(
+            f"verify broadcast budget {raw!r} is not a number of MB; using 512",
+            RuntimeWarning,
+        )
+        return 512.0
+
+
 def jaccard_pairs(
     df: DataFrame,
     candidates: DataFrame,
@@ -335,8 +358,9 @@ def jaccard_pairs(
     shuffles at all; above the budget the shuffle path with pair-volume
     partition sizing is kept unchanged.
 
-    ``broadcast_budget_mb``: explicit override of that budget (0 forces
-    the shuffle path; tests A/B the two arms with it).
+    ``broadcast_budget_mb``: explicit override of that budget (0 or
+    less forces the shuffle path, even for an empty shingle relation;
+    tests A/B the two arms with it).
     """
     # (id_a, id_b) pairs only — materialized once because the plan
     # references the candidate set four times (id union + two joins)
@@ -370,17 +394,10 @@ def jaccard_pairs(
     est_mb = ((n_elems or 0) * elem_bytes + (n_docs_c or 0) * 24) / 1e6
     sess = candidates.sparkSession
     if broadcast_budget_mb is None:
-        import os
-
-        broadcast_budget_mb = float(
-            sess.conf.get(
-                "spark.titan.verifyBroadcastMb",
-                os.environ.get("SPARK_GRAFT_VERIFY_BC_MB", "512"),
-            )
-        )
+        broadcast_budget_mb = verify_broadcast_budget_mb(sess)
     sh_a = sh.withColumnRenamed("_jid", "id_a").withColumnRenamed("_sh", "sh_a")
     sh_b = sh.withColumnRenamed("_jid", "id_b").withColumnRenamed("_sh", "sh_b")
-    if est_mb <= broadcast_budget_mb:
+    if 0 < broadcast_budget_mb and est_mb <= broadcast_budget_mb:
         # broadcast arm: each doc's array ships once per executor, and
         # the pair relation streams through two map-side hash joins
         # with NO shuffle — the alternative re-shuffles the pair rows

@@ -17,8 +17,6 @@ consumed — go through an Arrow-batched numpy matmul instead (see
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window, functions as F
 from titan_spark.compute.checkpointing import cut_lineage
 
@@ -212,13 +210,15 @@ def adaptive_planes(n_rows: int, target_occupancy: int = 16, floor: int = 8) -> 
     return max(floor, math.ceil(math.log2(n_rows / target_occupancy)))
 
 
-def _resolve_planes(df: DataFrame, n_planes: int | None) -> int:
+def _resolve_planes(df: DataFrame, n_planes: int | None) -> tuple[int, int | None]:
+    """(plane count, row count of ``df`` if it had to be counted)."""
     if n_planes is not None:
-        return n_planes
+        return n_planes, None
     # one count job; scalar result. At the driver's correctness scales
     # (2k vectors) this resolves to the historical 8, so pinned oracles
     # stay bit-identical; growth only kicks in where it matters.
-    return adaptive_planes(df.count())
+    n_rows = df.count()
+    return adaptive_planes(n_rows), n_rows
 
 
 def _pair_vector_join(
@@ -226,7 +226,7 @@ def _pair_vector_join(
     va: DataFrame,
     vb: DataFrame,
     df: DataFrame,
-    vec_col: str,
+    n_rows: int | None,
     dim: int,
 ) -> DataFrame:
     """Attach both endpoints' vectors to candidate pairs.
@@ -240,18 +240,17 @@ def _pair_vector_join(
     SPARK_GRAFT_VERIFY_BC_MB) both joins broadcast it and the pair
     relation never shuffles (sf10, 20.2 M candidates × 64-dim: 27.9 s
     shuffle vs 8.8 s broadcast, identical rows). Above the budget the
-    shuffle form is kept — the 100 TB path.
+    shuffle form is kept — the 100 TB path. ``n_rows`` is ``df``'s row
+    count when the caller already has it; else ``df`` is counted.
     """
-    sess = cand.sparkSession
-    budget_mb = float(
-        sess.conf.get(
-            "spark.titan.verifyBroadcastMb",
-            os.environ.get("SPARK_GRAFT_VERIFY_BC_MB", "512"),
-        )
-    )
-    est_mb = df.count() * (dim * 8 + 24) / 1e6
-    if est_mb <= budget_mb:
-        return cand.join(F.broadcast(va), "id_a").join(F.broadcast(vb), "id_b")
+    from titan_spark.pipeline.dedup import verify_broadcast_budget_mb
+
+    budget_mb = verify_broadcast_budget_mb(cand.sparkSession)
+    if budget_mb > 0:
+        if n_rows is None:
+            n_rows = df.count()
+        if n_rows * (dim * 8 + 24) / 1e6 <= budget_mb:
+            return cand.join(F.broadcast(va), "id_a").join(F.broadcast(vb), "id_b")
     return cand.join(va, "id_a").join(vb, "id_b")
 
 
@@ -278,7 +277,7 @@ def lsh_topk_pairs(
     the SQL oracle (plane-literal generation, same pattern as
     lsh_ann/ivf_ann).
     """
-    n_planes = _resolve_planes(df, n_planes)
+    n_planes, n_rows = _resolve_planes(df, n_planes)
     if dim is None:
         dim = df.select(F.size(vec_col)).first()[0]
     cand = _lsh_candidates(df, n_tables, n_planes, vec_col, id_col, dim)
@@ -295,7 +294,7 @@ def lsh_topk_pairs(
         _norm(F.col(vec_col)).alias("_nb"),
     )
     scored = (
-        _pair_vector_join(cand, va, vb, df, vec_col, dim)
+        _pair_vector_join(cand, va, vb, df, n_rows, dim)
         .select(
             "id_a",
             "id_b",
@@ -381,7 +380,7 @@ def semantic_dedup_clusters(
     nothing O(n²) — the default hash width grows with log₂(corpus)
     (:func:`adaptive_planes`) so candidate volume stays linear.
     """
-    n_planes = _resolve_planes(df, n_planes)
+    n_planes, n_rows = _resolve_planes(df, n_planes)
     if dim is None:
         dim = df.select(F.size(vec_col)).first()[0]
     cand = _lsh_candidates(df, n_tables, n_planes, vec_col, id_col, dim)
@@ -392,7 +391,7 @@ def semantic_dedup_clusters(
         F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), _norm(F.col(vec_col)).alias("_nb")
     )
     pairs = (
-        _pair_vector_join(cand, va, vb, df, vec_col, dim)
+        _pair_vector_join(cand, va, vb, df, n_rows, dim)
         .select(
             "id_a",
             "id_b",

@@ -4311,12 +4311,12 @@ def _feature_smooth_oracle() -> str:
 
     hop = """h{n} AS (
         SELECT v.id, {prev_cols},
-               FLOOR((CASE WHEN a.ag IS NULL THEN v.{prev}
-                           WHEN v.{prev} IS NULL THEN a.ag
-                           ELSE (a.ag * a.n + v.{prev}) / (a.n + 1) END) * 100 + 0.5)
+               FLOOR((CASE WHEN a.s IS NULL THEN v.{prev}
+                           WHEN v.{prev} IS NULL THEN a.s / a.n
+                           ELSE (a.s + v.{prev}) / (a.n + 1) END) * 100 + 0.5)
                    / 100 AS f{n}
         FROM h{p} v LEFT JOIN (
-            SELECT ue.u AS id, AVG(x.f{p}) AS ag, COUNT(x.f{p}) AS n
+            SELECT ue.u AS id, ROUND(SUM(x.f{p}), 6) AS s, COUNT(x.f{p}) AS n
             FROM ue JOIN h{p} x ON ue.v = x.id
             GROUP BY ue.u
         ) a ON v.id = a.id
